@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.expr.SortedIntersectCount
@@ -27,9 +27,17 @@ import graft.expr.SortedIntersectCount
   *    TrCountingGraph.cpp:389 and `thrust::reduce` at gpu-thrust.cu:24-27).
   *    Neighbor arrays never enter a shuffle or sort — the round-1 shuffled-join
   *    variant shipped BOTH arrays with every edge row and spilled ~0.3 TB on a
-  *    32M-edge input. When the adjacency exceeds executor memory
-  *    (`broadcastAdj = false` escape hatch), shard the edge set and broadcast per
-  *    shard — the reference's multi-GPU chunk split (main.cpp:87-120).
+  *    32M-edge input; it survives only as `broadcastAdj = false`, the
+  *    differential twin of [[globalAdjacency]].
+  *
+  * The adjacency form has four outputs — global count, per-vertex counts,
+  * per-edge support and per-edge membership — and each is a small reduction
+  * over ONE probe ([[probe]]: the oriented edges joined to N⁺(src) and N⁺(dst)).
+  * ONE decision ([[placement]]) places that probe: the whole CSR broadcast, or,
+  * when the adjacency exceeds the broadcast budget, the out-of-core escape —
+  * edge-balanced CSR blocks broadcast one block pair at a time by ONE sharded
+  * driver ([[shardedProbes]]), the reference's multi-GPU chunk split
+  * (main.cpp:87-120).
   */
 object TriangleCount {
 
@@ -126,59 +134,30 @@ object TriangleCount {
     val corners = trianglesRelational(oriented)
       .select(explode(array(col("a"), col("b"), col("c"))).as("v"))
       .groupBy("v").agg(count(lit(1)).as("cnt"))
-    GraphCore.vertices(canonical)
-      .join(corners, Seq("v"), "left")
-      .select(col("v"), coalesce(col("cnt"), lit(0L)).as("tri_cnt"))
+    zeroFill(GraphCore.vertices(canonical), corners, "tri_cnt")
+  }
+
+  /** One row per row of `keys` carrying its `cnt` from `counts` as `out`, 0 where
+    * `counts` has no row (vertices or edges in no triangle) — the tail of every
+    * keyed triangle output. */
+  private def zeroFill(keys: DataFrame, counts: DataFrame, out: String): DataFrame = {
+    val ks = keys.columns.toSeq
+    keys.join(counts, ks, "left")
+      .select(ks.map(col) :+ coalesce(col("cnt"), lit(0L)).as(out): _*)
   }
 
   /** Per-vertex counts in the adjacency (scale-path) form: for each oriented edge
     * (u,v), every w ∈ N⁺(u) ∩ N⁺(v) closes one triangle {u,v,w} — u, v and w each
     * get one credit. Materializes only the actual intersection elements (O(#triangles)
-    * rows), never the O(m^1.5) wedge set of the relational form. Results identical
-    * to [[perVertex]]. */
+    * rows), never the O(m^1.5) wedge set of the relational form. Placement as in
+    * [[globalAdjacency]]; results identical to [[perVertex]]. */
   def perVertexAdjacency(
       canonical: DataFrame,
       oriented: DataFrame,
       adj: DataFrame,
-      broadcastAdj: Boolean = true,
-      maxBroadcastBytes: Long = AutoBroadcastBytes): DataFrame = {
-    if (broadcastAdj) {
-      // same auto-select contract as [[globalAdjacency]]: beyond the broadcast
-      // budget, fall through to the chunk-pair sharded form
-      ensurePersisted(adj) // the size probe is an eager agg; the plan reads adj twice more
-      val budget = resolveMaxBroadcastBytes(adj.sparkSession, maxBroadcastBytes)
-      val bytes = adjacencyBytes(adj)
-      if (bytes > budget) {
-        val conc = resolvePairConcurrency(adj.sparkSession)
-        val shards = autoShards(bytes, resolveShardBudget(budget, conc))
-        System.err.println(s"[TriangleCount] adjacency ≈ $bytes B > broadcast budget $budget B" +
-          s" — auto-selecting the per-vertex sharded kernel ($shards shards, $conc pair jobs)")
-        return perVertexAdjacencySharded(
-          canonical.sparkSession, canonical, oriented, adj, shards, concurrency = conc)
-      }
-    }
-    // broadcast by default for the same reason as [[globalAdjacency]]
-    def side(a: DataFrame) = if (broadcastAdj) broadcast(a) else a
-    val adjU = side(adj.select(col("v").as("src"), col("nbrs").as("nbrs_u")))
-    val adjV = side(adj.select(col("v").as("dst"), col("nbrs").as("nbrs_v")))
-    val withW = oriented
-      .join(adjU, "src")
-      .join(adjV, "dst")
-      .select(col("src"), col("dst"),
-        array_intersect(col("nbrs_u"), col("nbrs_v")).as("ws"))
-      .where(size(col("ws")) > 0)
-      .transform(graft.CacheTracker.persist)
-    val endpointCredits = withW
-      .select(col("src").as("v"), size(col("ws")).cast("long").as("c"))
-      .unionAll(withW.select(col("dst").as("v"), size(col("ws")).cast("long").as("c")))
-    val witnessCredits = withW
-      .select(explode(col("ws")).as("v"), lit(1L).as("c"))
-    val corners = endpointCredits.unionAll(witnessCredits)
-      .groupBy("v").agg(sum("c").as("cnt"))
-    GraphCore.vertices(canonical)
-      .join(corners, Seq("v"), "left")
-      .select(col("v"), coalesce(col("cnt"), lit(0L)).as("tri_cnt"))
-  }
+      maxBroadcastBytes: Long = AutoBroadcastBytes): DataFrame =
+    keyedCounts(GraphCore.vertices(canonical), "tri_cnt", oriented, adj,
+      placement(adj, maxBroadcastBytes, "per-vertex"))(vertexCredits)
 
   /** Sentinel for `maxBroadcastBytes` parameters: resolve the budget from the
     * session via [[resolveMaxBroadcastBytes]]. */
@@ -200,15 +179,9 @@ object TriangleCount {
     spark.conf.getOption("spark.graft.pairConcurrency")
       .map(_.toInt).getOrElse(defaultPairConcurrency)
 
-  /** How many per-pair credit partials batch up before one merge folds them
-    * into the accumulator of [[perVertexAdjacencySharded]] /
-    * [[edgeTriangleCountsSharded]]. 1 restores the merge-per-pair behavior.
-    * Override per session with `spark.graft.shardMergeFanIn`. */
+  /** How many per-pair partials batch up in the sharded placement's
+    * [[CreditAccumulator]] before one merge folds them into the running total. */
   val defaultShardMergeFanIn: Int = 8
-
-  private[graft] def resolveMergeFanIn(spark: SparkSession): Int =
-    spark.conf.getOption("spark.graft.shardMergeFanIn")
-      .map(_.toInt).getOrElse(defaultShardMergeFanIn)
 
   /** Rolling accumulator for OVERLAPPING per-pair credit partials (vertex- or
     * edge-keyed sums). Pair jobs hand in already-materialized
@@ -220,8 +193,7 @@ object TriangleCount {
     * Credits are sums, so the merge is associative-commutative and completion
     * order cannot change the result. Resident state: ≤ fanIn materialized
     * partials (each holding only the keys credited by one block pair) + 1
-    * accumulator — still bounded, now conf-tunable (fanIn 1 ⇒ the old
-    * merge-per-pair bound). */
+    * accumulator (fanIn 1 ⇒ merge per pair). */
   private[graft] final class CreditAccumulator(keyCols: Seq[String], fanIn: Int) {
     require(fanIn >= 1, "fanIn must be positive")
     private var acc: DataFrame = null
@@ -382,6 +354,172 @@ object TriangleCount {
     }
   }
 
+  /** The sharded placement: `shards` edge-balanced adjacency blocks, probed one
+    * block pair at a time with `concurrency` pair jobs in flight. */
+  private[graft] final case class Sharded(shards: Int, concurrency: Int) {
+    require(shards >= 1, "shards must be positive")
+    require(concurrency >= 1, "concurrency must be positive")
+  }
+
+  /** The one placement decision of the adjacency kernels: broadcast the whole
+    * CSR (None) while its estimate fits the broadcast budget, else the
+    * chunk-pair [[Sharded]] placement with the shard count sized to the
+    * pair-job pool — the reference's own out-of-core switch (main.cpp:85-97
+    * picks the split kernel when `12m > GPU_mem`). Every result is identical
+    * either way. A sharded decision prints one `[TriangleCount]` line naming
+    * `output`; the benchmark parses the shard count out of it. */
+  private[graft] def placement(adj: DataFrame, maxBroadcastBytes: Long, output: String): Option[Sharded] = {
+    ensurePersisted(adj) // the size probe is an eager agg; the plan reads adj twice more
+    val spark = adj.sparkSession
+    val budget = resolveMaxBroadcastBytes(spark, maxBroadcastBytes)
+    val bytes = adjacencyBytes(adj)
+    if (bytes <= budget) None
+    else {
+      // 2 blocks live per pair job × pool width: size k to the POOL budget
+      val conc = resolvePairConcurrency(spark)
+      val shards = autoShards(bytes, resolveShardBudget(budget, conc))
+      Console.err.println(s"[TriangleCount] $output: adjacency ≈ $bytes B > broadcast budget $budget B" +
+        s" — auto-selecting the sharded kernel ($shards shards, $conc pair jobs in flight)")
+      Some(Sharded(shards, conc))
+    }
+  }
+
+  /** The one intersect probe: each (src, dst) edge of `edges` joins N⁺(src)
+    * from `adjU` and N⁺(dst) from `adjV` — the full adjacency in the broadcast
+    * placement, one block pair's two blocks in the sharded one. Broadcast
+    * sides keep the neighbor arrays out of every shuffle and sort: both joins
+    * and the per-row reduction run in one codegen stage. An edge whose dst has
+    * out-degree 0 has no adjacency row and drops (it closes no triangle).
+    * Output (src, dst, nbrs_u, nbrs_v). */
+  private[graft] def probe(edges: DataFrame, adjU: DataFrame, adjV: DataFrame,
+      broadcastSides: Boolean = true): DataFrame = {
+    def side(a: DataFrame, key: String, nbrs: String) = {
+      val s = a.select(col("v").as(key), col("nbrs").as(nbrs))
+      if (broadcastSides) broadcast(s) else s
+    }
+    edges
+      .join(side(adjU, "src", "nbrs_u"), "src")
+      .join(side(adjV, "dst", "nbrs_v"), "dst")
+      .select(col("src"), col("dst"), col("nbrs_u"), col("nbrs_v"))
+  }
+
+  /** |N⁺(u) ∩ N⁺(v)| of each probe row by the codegen two-pointer merge. */
+  private def intersectCount(probed: DataFrame): Column = {
+    SortedIntersectCount.register(probed.sparkSession)
+    call_function(SortedIntersectCount.name, col("nbrs_u"), col("nbrs_v"))
+  }
+
+  /** Global reduction of a probe: one row (triangles). */
+  private[graft] def triangleSum(probed: DataFrame): DataFrame =
+    probed.select(intersectCount(probed).as("cnt"))
+      .agg(coalesce(sum(col("cnt")), lit(0L)).as("triangles"))
+
+  /** Per-edge support of a probe: (src, dst, cnt), zero-support rows kept. */
+  private def support(probed: DataFrame): DataFrame =
+    probed.select(col("src"), col("dst"), intersectCount(probed).as("cnt"))
+
+  /** Witness credits of a probe summed per key. Each w ∈ ws = N⁺(u) ∩ N⁺(v)
+    * closes the triangle {u, v, w}; `credits(ws)` lists the (keys…, c) structs
+    * edge (u, v) earns, and ONE generator pass explodes them, so the probe and
+    * the intersect run once per edge — a union of per-credit-kind selects
+    * would re-run both in every branch. Output (keys…, cnt). */
+  private def creditSums(probed: DataFrame, keys: Seq[String])(credits: Column => Column): DataFrame =
+    probed
+      .select(col("src"), col("dst"), array_intersect(col("nbrs_u"), col("nbrs_v")).as("ws"))
+      .where(size(col("ws")) > 0)
+      .select(explode(credits(col("ws"))).as("r"))
+      .groupBy(keys.map(k => col(s"r.$k").as(k)): _*)
+      .agg(sum(col("r.c")).as("cnt"))
+
+  /** Per-vertex credits: u and v each earn |ws|, each witness w earns 1 —
+    * 2·E′ + T rows into the aggregate (E′ edges closing a triangle, T
+    * triangles). Output (v, cnt). */
+  private[graft] def vertexCredits(probed: DataFrame): DataFrame = {
+    def credit(v: Column, c: Column) = struct(v.as("v"), c.cast("long").as("c"))
+    creditSums(probed, Seq("v"))(ws => concat(
+      array(credit(col("src"), size(ws)), credit(col("dst"), size(ws))),
+      transform(ws, credit(_, lit(1L)))))
+  }
+
+  /** Per-edge membership credits: under the acyclic orientation u→v, u→w,
+    * v→w the base edge (u, v) earns |ws| and each witness w credits (u, w) and
+    * (v, w) — every credited edge is an oriented edge. Output (src, dst, cnt). */
+  private def edgeCredits(probed: DataFrame): DataFrame = {
+    def credit(u: Column, v: Column, c: Column) =
+      struct(u.as("src"), v.as("dst"), c.cast("long").as("c"))
+    creditSums(probed, Seq("src", "dst"))(ws => concat(
+      array(credit(col("src"), col("dst"), size(ws))),
+      transform(ws, credit(col("src"), _, lit(1L))),
+      transform(ws, credit(col("dst"), _, lit(1L)))))
+  }
+
+  /** The block tagging of the sharded placement: vertices cut into `shards`
+    * contiguous ranges carrying ~equal EDGES via [[GraphCore.csrBlocks]] (the
+    * `get_split_v2` semantics — oracle-checked). Returns the persisted
+    * (src, dst, bs, bd) edges tagged with both endpoint blocks — a dst with
+    * out-degree 0 has no block, and its edges drop as in [[probe]] — and the
+    * persisted (v, nbrs, block) adjacency. */
+  private[graft] def blockTagged(oriented: DataFrame, adj: DataFrame, shards: Int): (DataFrame, DataFrame) = {
+    val blocks = GraphCore.csrBlocks(adj, shards).select(col("v"), col("block"))
+    val adjB = CacheTracker.persist(adj.join(blocks, "v").select(col("v"), col("nbrs"), col("block")))
+    val eB = CacheTracker.persist(oriented
+      .join(blocks.select(col("v").as("src"), col("block").as("bs")), "src")
+      .join(blocks.select(col("v").as("dst"), col("block").as("bd")), "dst")
+      .select(col("src"), col("dst"), col("bs"), col("bd")))
+    (eB, adjB)
+  }
+
+  /** Block pair (i, j)'s probe: its edges against adjacency blocks i and j. */
+  private[graft] def pairProbe(eB: DataFrame, adjB: DataFrame, i: Long, j: Long): DataFrame =
+    probe(eB.where(col("bs") === i && col("bd") === j),
+      adjB.where(col("block") === i), adjB.where(col("block") === j))
+
+  /** The one sharded driver — the Spark analog of the reference's 2D
+    * chunk-pair split kernel (gpu.cu:27-58 `CalculateTrianglesSplit_v2`
+    * iterates `split_num × split_num` chunk pairs). Each oriented edge (u, v)
+    * belongs to block pair (block(u), block(v)); for every NON-EMPTY pair — at
+    * most shards², usually far fewer — `pairJob` gets that pair's probe, whose
+    * two broadcast blocks (≈ 2/shards of the CSR) are the only adjacency bytes
+    * the job holds. Each edge is probed in exactly one pair job; blocks are
+    * re-broadcast ≤ 2·shards times, the price of never holding the full CSR —
+    * the same trade the reference makes re-reading its edge list per chunk
+    * pair. `s.concurrency` pair jobs run at once (the reference divides the
+    * pair list across MPI ranks, main.cpp:87-90): each job is itself
+    * distributed, so the pool only overlaps fixed broadcast-build cost, and
+    * resident adjacency stays ≤ concurrency × 2 blocks. */
+  private def shardedProbes(oriented: DataFrame, adj: DataFrame, s: Sharded)(pairJob: DataFrame => Unit): Unit = {
+    val (eB, adjB) = blockTagged(oriented, adj, s.shards)
+    val present = eB.groupBy("bs", "bd").agg(count(lit(1)))
+      .select(col("bs"), col("bd")).collect() // ≤ shards² coordinates — tiny
+      .map(r => (r.getLong(0), r.getLong(1)))
+      .sortBy(identity)
+    runPairJobs(adj.sparkSession, s.concurrency, present.toSeq.map { case (i, j) => () =>
+      pairJob(pairProbe(eB, adjB, i, j))
+    })
+  }
+
+  /** A keyed output: `reduce` over the probe in placement `at`, zero-filled
+    * over `keys` into column `out`. Broadcast (None) reduces one probe of the
+    * full adjacency. Sharded, each pair job materializes its own partial
+    * (EAGER localCheckpoint: only that job's two broadcasts are ever live, and
+    * the lineage is cut) into a [[CreditAccumulator]] — credits overlap across
+    * pairs and sum; disjoint support partials sum to themselves. Resident
+    * state: concurrency × (2 blocks + 1 partial) + ≤ fanIn partials + one
+    * key-sized table. */
+  private def keyedCounts(keys: DataFrame, out: String, oriented: DataFrame, adj: DataFrame,
+      at: Option[Sharded])(reduce: DataFrame => DataFrame): DataFrame = {
+    val keyCols = keys.columns.toSeq
+    val counts = at match {
+      case None => reduce(probe(oriented, adj, adj))
+      case Some(s) =>
+        val acc = new CreditAccumulator(keyCols, defaultShardMergeFanIn)
+        shardedProbes(oriented, adj, s)(p => acc.add(reduce(p).localCheckpoint(true)))
+        acc.result().getOrElse(
+          adj.sparkSession.range(0).select(keyCols.map(lit(0L).as(_)) :+ lit(0L).as("cnt"): _*))
+    }
+    zeroFill(keys, counts, out)
+  }
+
   /** Global triangle count via adjacency-list intersection (the reference's physical
     * shape). `adj` must be [[GraphCore.adjacency]] of `oriented`.
     *
@@ -390,9 +528,9 @@ object TriangleCount {
     * per rank) the adjacency is broadcast and the edge stream flows through two
     * broadcast hash joins + the merge count inside ONE codegen stage — neighbor
     * arrays never enter a shuffle or sort. When the estimated adjacency exceeds
-    * `maxBroadcastBytes`, the call AUTO-SELECTS [[globalAdjacencySharded]] — the
-    * reference's own out-of-core escape (main.cpp:85-97 picks the split kernel
-    * when `12m > GPU_mem`); every measured result is identical either way.
+    * `maxBroadcastBytes`, the [[placement]] decision selects
+    * [[globalAdjacencySharded]] instead; every measured result is identical
+    * either way.
     *
     * The shuffled-join alternative (`broadcastAdj = false`) ships BOTH arrays
     * with every edge row through a sort-merge join: measured on a 32M-edge graph
@@ -403,386 +541,89 @@ object TriangleCount {
       oriented: DataFrame,
       adj: DataFrame,
       broadcastAdj: Boolean = true,
-      maxBroadcastBytes: Long = AutoBroadcastBytes): DataFrame = {
-    SortedIntersectCount.register(spark)
-    if (broadcastAdj) {
-      ensurePersisted(adj) // the size probe is an eager agg; the plan reads adj twice more
-      val budget = resolveMaxBroadcastBytes(spark, maxBroadcastBytes)
-      val bytes = adjacencyBytes(adj)
-      if (bytes > budget) {
-        // 2 blocks live per pair job × pool width: size k to the POOL budget
-        val conc = resolvePairConcurrency(spark)
-        val shards = autoShards(bytes, resolveShardBudget(budget, conc))
-        System.err.println(s"[TriangleCount] adjacency ≈ $bytes B > broadcast budget $budget B" +
-          s" — auto-selecting the sharded kernel ($shards shards, $conc pair jobs in flight)")
-        return globalAdjacencySharded(spark, oriented, adj, shards, concurrency = conc)
-      }
+      maxBroadcastBytes: Long = AutoBroadcastBytes): DataFrame =
+    if (!broadcastAdj) triangleSum(probe(oriented, adj, adj, broadcastSides = false))
+    else placement(adj, maxBroadcastBytes, "global") match {
+      case None => triangleSum(probe(oriented, adj, adj))
+      case Some(s) => globalAdjacencySharded(spark, oriented, adj, s.shards, s.concurrency)
     }
-    def side(a: DataFrame) = if (broadcastAdj) broadcast(a) else a
-    val adjU = side(adj.select(col("v").as("src"), col("nbrs").as("nbrs_u")))
-    val adjV = side(adj.select(col("v").as("dst"), col("nbrs").as("nbrs_v")))
-    oriented
-      .join(adjU, "src")
-      .join(adjV, "dst")
-      .select(call_function(SortedIntersectCount.name, col("nbrs_u"), col("nbrs_v")).as("cnt"))
-      .agg(coalesce(sum(col("cnt")), lit(0L)).as("triangles"))
-  }
 
-  /** Out-of-core (sharded-broadcast) global triangle count — the Spark analog of
-    * the reference's 2D chunk-pair split kernel (gpu.cu:27-58
-    * `CalculateTrianglesSplit_v2` iterates `split_num × split_num` chunk pairs;
-    * main.cpp:85-97 selects it when the CSR exceeds device memory).
-    *
-    * Vertices are cut into `shards` contiguous ranges carrying ~equal EDGES via
-    * [[GraphCore.csrBlocks]] (the `get_split_v2` semantics — oracle-checked).
-    * Each oriented edge (u, v) belongs to block pair (block(u), block(v)); for
-    * every NON-EMPTY pair (i, j) — at most shards², usually far fewer — one job
-    * broadcasts adjacency blocks i and j (≈ 2/shards of the full CSR, the only
-    * adjacency bytes resident at a time), probes them with that pair's edges
-    * inside one codegen stage, and reduces to a scalar partial. Partials sum on
+  /** Out-of-core global triangle count: each block pair's probe (see
+    * [[shardedProbes]]) reduces to a scalar partial and the partials sum on
     * the driver — the analog of the reference's sequential chunk-pair kernel
-    * launches + `thrust::reduce`. Neighbor arrays never enter a shuffle in any
-    * pair job. Edge rows carry only (src, dst, two block ids): the edge table is
-    * rescanned per pair from its persisted, block-filtered form, exactly like
-    * the reference re-reads its edge list per chunk pair.
-    *
-    * Total work: each edge is processed in exactly one pair job (each triangle
-    * counted once); adjacency blocks are re-broadcast ≤ 2·shards times, the
-    * price of never holding the full CSR — the same trade the reference makes.
-    *
-    * Job count is ≤ shards² (the reference's split kernel enumerates the same
-    * split_num² chunk pairs, main.cpp:87-90) — so size `maxBroadcastBytes` to
-    * the executor budget and keep shards in the tens-to-hundreds; the
-    * auto-select cap of 1024 shards bounds the worst case. At MPI-like scale
-    * the reference divides the pair list across ranks; the Spark analog — a
-    * small pool of concurrent pair jobs (each itself distributed, memory bound
-    * = pool × 2 blocks) — is a scheduler knob on top of this same plan. */
+    * launches + `thrust::reduce`. Job count is ≤ shards², so size
+    * `maxBroadcastBytes` to the executor budget and keep shards in the
+    * tens-to-hundreds; the auto-select cap of 1024 shards bounds the worst case. */
   def globalAdjacencySharded(
       spark: SparkSession,
       oriented: DataFrame,
       adj: DataFrame,
       shards: Int,
       concurrency: Int = 1): DataFrame = {
-    require(shards >= 1, "shards must be positive")
-    require(concurrency >= 1, "concurrency must be positive")
-    SortedIntersectCount.register(spark)
-    val blocks = GraphCore.csrBlocks(adj, shards).select(col("v"), col("block"))
-    // (v, nbrs, block): the CSR with its block id — filtered per pair job
-    val adjB = CacheTracker.persist(adj.join(blocks, "v").select(col("v"), col("nbrs"), col("block")))
-    // (src, dst, bs, bd): edges tagged with both endpoint blocks. A dst with
-    // out-degree 0 has no adjacency row — its edges close no triangle and drop
-    // here, exactly as the broadcast form's inner adjacency join drops them.
-    val eB = CacheTracker.persist(oriented
-      .join(blocks.select(col("v").as("src"), col("block").as("bs")), "src")
-      .join(blocks.select(col("v").as("dst"), col("block").as("bd")), "dst")
-      .select(col("src"), col("dst"), col("bs"), col("bd")))
-    val present = eB.groupBy("bs", "bd").agg(count(lit(1)))
-      .select(col("bs"), col("bd")).collect() // ≤ shards² coordinates — tiny
-      .map(r => (r.getLong(0), r.getLong(1)))
-      .sortBy(identity)
-    // `concurrency` pair jobs in flight at once (the Spark analog of the
-    // reference dividing the chunk-pair list across MPI ranks,
-    // main.cpp:87-90): each job is itself distributed, so the pool only
-    // overlaps their fixed broadcast-build/schedule cost. Resident adjacency
-    // is bounded by concurrency × 2 blocks — size `shards` accordingly.
     val total = new java.util.concurrent.atomic.AtomicLong(0L)
-    runPairJobs(spark, concurrency, present.toSeq.map { case (i, j) => () =>
-      total.addAndGet(shardPairCount(eB, adjB, i, j).first().getLong(0)): Unit
-    })
+    shardedProbes(oriented, adj, Sharded(shards, concurrency))(p =>
+      total.addAndGet(triangleSum(p).first().getLong(0)): Unit)
     import spark.implicits._
     Seq(total.get()).toDF("triangles")
   }
 
-  /** Out-of-core per-vertex triangle counts — the sharded-broadcast twin of
-    * [[perVertexAdjacency]], same 2D chunk-pair tiling as
-    * [[globalAdjacencySharded]]. Each pair job materializes its (v, cnt)
-    * credit partials (endpoint + witness credits of that pair's edges — longs,
-    * never arrays) into a [[CreditAccumulator]]: the merge that folds partials
-    * into the running total batches `spark.graft.shardMergeFanIn` partials per
-    * shuffle (round 6 — merging per pair re-aggregated the whole accumulator
-    * shards² times), so at any moment the resident state is
-    * concurrency × (2 adjacency blocks + 1 partial) + ≤ fanIn partials + 1
-    * vertex-sized count table. Results identical to [[perVertexAdjacency]]. */
+  /** Out-of-core per-vertex triangle counts: [[perVertexAdjacency]] in the
+    * sharded placement. Results identical to [[perVertexAdjacency]]. */
   def perVertexAdjacencySharded(
       spark: SparkSession,
       canonical: DataFrame,
       oriented: DataFrame,
       adj: DataFrame,
       shards: Int,
-      concurrency: Int = 1): DataFrame = {
-    require(shards >= 1, "shards must be positive")
-    require(concurrency >= 1, "concurrency must be positive")
-    val blocks = GraphCore.csrBlocks(adj, shards).select(col("v"), col("block"))
-    val adjB = CacheTracker.persist(adj.join(blocks, "v").select(col("v"), col("nbrs"), col("block")))
-    val eB = CacheTracker.persist(oriented
-      .join(blocks.select(col("v").as("src"), col("block").as("bs")), "src")
-      .join(blocks.select(col("v").as("dst"), col("block").as("bd")), "dst")
-      .select(col("src"), col("dst"), col("bs"), col("bd")))
-    val present = eB.groupBy("bs", "bd").agg(count(lit(1)))
-      .select(col("bs"), col("bd")).collect()
-      .map(r => (r.getLong(0), r.getLong(1)))
-      .sortBy(identity)
-    // Each pair job materializes its own credit partial (EAGER localCheckpoint:
-    // only that job's two broadcasts are ever live, and the lineage is cut),
-    // then hands it to the fan-in-batched accumulator (see CreditAccumulator
-    // for the memory bound and why the merge is order-insensitive).
-    val accumulator = new CreditAccumulator(Seq("v"), resolveMergeFanIn(spark))
-    runPairJobs(spark, concurrency, present.toSeq.map { case (i, j) => () =>
-      accumulator.add(pairCredits(eB, adjB, i, j).localCheckpoint(true))
-    })
-    val corners = accumulator.result().getOrElse {
-      import spark.implicits._
-      Seq.empty[(Long, Long)].toDF("v", "cnt")
-    }
-    GraphCore.vertices(canonical)
-      .join(corners, Seq("v"), "left")
-      .select(col("v"), coalesce(col("cnt"), lit(0L)).as("tri_cnt"))
-  }
-
-  /** One chunk-pair credit partial: (v, cnt) endpoint + witness credits of block
-    * pair (i, j)'s edges — longs only, never arrays. */
-  private[graft] def pairCredits(eB: DataFrame, adjB: DataFrame, i: Long, j: Long): DataFrame = {
-    val aU = broadcast(adjB.where(col("block") === i)
-      .select(col("v").as("src"), col("nbrs").as("nbrs_u")))
-    val aV = broadcast(adjB.where(col("block") === j)
-      .select(col("v").as("dst"), col("nbrs").as("nbrs_v")))
-    val withW = eB.where(col("bs") === i && col("bd") === j)
-      .join(aU, "src")
-      .join(aV, "dst")
-      .select(col("src"), col("dst"),
-        array_intersect(col("nbrs_u"), col("nbrs_v")).as("ws"))
-      .where(size(col("ws")) > 0)
-    withW
-      .select(col("src").as("v"), size(col("ws")).cast("long").as("c"))
-      .unionAll(withW.select(col("dst").as("v"), size(col("ws")).cast("long").as("c")))
-      .unionAll(withW.select(explode(col("ws")).as("v"), lit(1L).as("c")))
-      .groupBy("v").agg(sum("c").as("cnt"))
-  }
-
-  /** One chunk-pair partial: edges of block pair (i, j) probe the two broadcast
-    * adjacency blocks and reduce to a single count. Factored out so tests can
-    * assert the plan shape (broadcast hash joins only — no sort-merge join ever
-    * touches an array payload). */
-  private[graft] def shardPairCount(eB: DataFrame, adjB: DataFrame, i: Long, j: Long): DataFrame = {
-    val aU = broadcast(adjB.where(col("block") === i)
-      .select(col("v").as("src"), col("nbrs").as("nbrs_u")))
-    val aV = broadcast(adjB.where(col("block") === j)
-      .select(col("v").as("dst"), col("nbrs").as("nbrs_v")))
-    eB.where(col("bs") === i && col("bd") === j)
-      .join(aU, "src")
-      .join(aV, "dst")
-      .select(call_function(SortedIntersectCount.name, col("nbrs_u"), col("nbrs_v")).as("cnt"))
-      .agg(coalesce(sum(col("cnt")), lit(0L)).as("partial"))
-  }
+      concurrency: Int = 1): DataFrame =
+    keyedCounts(GraphCore.vertices(canonical), "tri_cnt", oriented, adj,
+      Some(Sharded(shards, concurrency)))(vertexCredits)
 
   /** Per-edge triangle support: |N⁺(u) ∩ N⁺(v)| for EVERY oriented edge (u, v),
     * zero rows included — the k-truss building block (an edge belongs to the
     * k-truss iff its support ≥ k−2) and the per-edge refinement of the global
-    * count (Σ support = triangles). Same broadcast-CSR probe + codegen
-    * two-pointer merge as [[globalAdjacency]], minus the final reduce; left
-    * joins because a dst with out-degree 0 has no adjacency row (support 0).
-    * Output (src, dst, support). */
+    * count (Σ support = triangles). Same probe and placement as
+    * [[globalAdjacency]], minus the final reduce. Output (src, dst, support). */
   def edgeSupport(
       spark: SparkSession,
       oriented: DataFrame,
       adj: DataFrame,
-      broadcastAdj: Boolean = true,
-      maxBroadcastBytes: Long = AutoBroadcastBytes): DataFrame = {
-    SortedIntersectCount.register(spark)
-    if (broadcastAdj) {
-      // same auto-select contract as [[globalAdjacency]] (round-5 verdict #1:
-      // the per-edge family was the only kernel left that broadcast the full
-      // CSR unconditionally — the exact shape the 141M run proved aborts on
-      // maxResultSize at ~1.14 GB adjacency)
-      ensurePersisted(adj)
-      val budget = resolveMaxBroadcastBytes(spark, maxBroadcastBytes)
-      val bytes = adjacencyBytes(adj)
-      if (bytes > budget) {
-        val conc = resolvePairConcurrency(spark)
-        val shards = autoShards(bytes, resolveShardBudget(budget, conc))
-        System.err.println(s"[TriangleCount] adjacency ≈ $bytes B > broadcast budget $budget B" +
-          s" — auto-selecting the edge-support sharded kernel ($shards shards, $conc pair jobs)")
-        return edgeSupportSharded(spark, oriented, adj, shards, concurrency = conc)
-      }
-    }
-    def side(a: DataFrame) = if (broadcastAdj) broadcast(a) else a
-    val adjU = side(adj.select(col("v").as("src"), col("nbrs").as("nbrs_u")))
-    val adjV = side(adj.select(col("v").as("dst"), col("nbrs").as("nbrs_v")))
-    oriented
-      .join(adjU, Seq("src"), "left")
-      .join(adjV, Seq("dst"), "left")
-      .select(col("src"), col("dst"),
-        when(col("nbrs_u").isNull || col("nbrs_v").isNull, lit(0L))
-          .otherwise(
-            call_function(SortedIntersectCount.name, col("nbrs_u"), col("nbrs_v")))
-          .as("support"))
-  }
+      maxBroadcastBytes: Long = AutoBroadcastBytes): DataFrame =
+    keyedCounts(oriented.select(col("src"), col("dst")), "support", oriented, adj,
+      placement(adj, maxBroadcastBytes, "edge-support"))(support)
 
-  /** Out-of-core per-edge support — the sharded-broadcast twin of [[edgeSupport]],
-    * same 2D chunk-pair tiling as [[globalAdjacencySharded]] (gpu.cu:27-58's
-    * split kernel, per round-5 verdict #1). Every oriented edge lives in exactly
-    * ONE block pair, so the pair partials are DISJOINT (src, dst, support) sets:
-    * the merge is a plain union of per-pair `localCheckpoint`ed partials — no
-    * re-aggregation, unlike the overlapping credits of
-    * [[perVertexAdjacencySharded]]. Edges whose dst has no adjacency row drop
-    * from the block tagging and re-enter with support 0 through the final left
-    * join — the same rows the broadcast form's left joins produce. */
+  /** [[edgeSupport]] in the sharded placement. */
   def edgeSupportSharded(
       spark: SparkSession,
       oriented: DataFrame,
       adj: DataFrame,
       shards: Int,
-      concurrency: Int = 1): DataFrame = {
-    require(shards >= 1, "shards must be positive")
-    require(concurrency >= 1, "concurrency must be positive")
-    SortedIntersectCount.register(spark)
-    val blocks = GraphCore.csrBlocks(adj, shards).select(col("v"), col("block"))
-    val adjB = CacheTracker.persist(adj.join(blocks, "v").select(col("v"), col("nbrs"), col("block")))
-    val eB = CacheTracker.persist(oriented
-      .join(blocks.select(col("v").as("src"), col("block").as("bs")), "src")
-      .join(blocks.select(col("v").as("dst"), col("block").as("bd")), "dst")
-      .select(col("src"), col("dst"), col("bs"), col("bd")))
-    val present = eB.groupBy("bs", "bd").agg(count(lit(1)))
-      .select(col("bs"), col("bd")).collect() // ≤ shards² coordinates — tiny
-      .map(r => (r.getLong(0), r.getLong(1)))
-      .sortBy(identity)
-    val partials = new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
-    runPairJobs(spark, concurrency, present.toSeq.map { case (i, j) => () =>
-      partials.add(pairSupport(eB, adjB, i, j).localCheckpoint(true)): Unit
-    })
-    import scala.jdk.CollectionConverters._
-    val sup = partials.asScala.toSeq match {
-      case Nil =>
-        import spark.implicits._
-        Seq.empty[(Long, Long, Long)].toDF("src", "dst", "support")
-      case ps => ps.reduce(_ unionAll _)
-    }
-    oriented
-      .join(sup.withColumnRenamed("support", "s"), Seq("src", "dst"), "left")
-      .select(col("src"), col("dst"), coalesce(col("s"), lit(0L)).as("support"))
-  }
-
-  /** One chunk-pair support partial: (src, dst, support) for block pair (i, j)'s
-    * edges — zero-support rows kept (no filter), so the union of partials covers
-    * every tagged edge exactly once. */
-  private[graft] def pairSupport(eB: DataFrame, adjB: DataFrame, i: Long, j: Long): DataFrame = {
-    val aU = broadcast(adjB.where(col("block") === i)
-      .select(col("v").as("src"), col("nbrs").as("nbrs_u")))
-    val aV = broadcast(adjB.where(col("block") === j)
-      .select(col("v").as("dst"), col("nbrs").as("nbrs_v")))
-    eB.where(col("bs") === i && col("bd") === j)
-      .join(aU, "src")
-      .join(aV, "dst")
-      .select(col("src"), col("dst"),
-        call_function(SortedIntersectCount.name, col("nbrs_u"), col("nbrs_v")).as("support"))
-  }
+      concurrency: Int = 1): DataFrame =
+    keyedCounts(oriented.select(col("src"), col("dst")), "support", oriented, adj,
+      Some(Sharded(shards, concurrency)))(support)
 
   /** Per-edge triangle MEMBERSHIP counts — each triangle {u,v,w} credits ALL
     * THREE of its edges (Σ tri_cnt = 3·triangles), unlike [[edgeSupport]]'s
-    * base-edge counts (Σ = triangles). This is the k-truss peel criterion.
-    * Under the acyclic orientation u→v, u→w, v→w, the witness rows of base
-    * edge (u,v) credit (u,v), (u,w) and (v,w) — all of them oriented edges, so
-    * the credit aggregation stays on the oriented table. Zero rows included.
-    * Output (src, dst, tri_cnt). */
+    * base-edge counts (Σ = triangles). This is the k-truss peel criterion;
+    * [[ktrussEdges]] inherits the placement decision per peel round. Zero rows
+    * included. Output (src, dst, tri_cnt). */
   def edgeTriangleCounts(
       spark: SparkSession,
       oriented: DataFrame,
       adj: DataFrame,
-      broadcastAdj: Boolean = true,
-      maxBroadcastBytes: Long = AutoBroadcastBytes): DataFrame = {
-    if (broadcastAdj) {
-      // same auto-select contract as [[globalAdjacency]]; [[ktrussEdges]]
-      // inherits the escape per peel round through this probe
-      ensurePersisted(adj)
-      val budget = resolveMaxBroadcastBytes(spark, maxBroadcastBytes)
-      val bytes = adjacencyBytes(adj)
-      if (bytes > budget) {
-        val conc = resolvePairConcurrency(spark)
-        val shards = autoShards(bytes, resolveShardBudget(budget, conc))
-        System.err.println(s"[TriangleCount] adjacency ≈ $bytes B > broadcast budget $budget B" +
-          s" — auto-selecting the edge-credit sharded kernel ($shards shards, $conc pair jobs)")
-        return edgeTriangleCountsSharded(spark, oriented, adj, shards, concurrency = conc)
-      }
-    }
-    def side(a: DataFrame) = if (broadcastAdj) broadcast(a) else a
-    val adjU = side(adj.select(col("v").as("src"), col("nbrs").as("nbrs_u")))
-    val adjV = side(adj.select(col("v").as("dst"), col("nbrs").as("nbrs_v")))
-    val withW = CacheTracker.persist(oriented
-      .join(adjU, "src")
-      .join(adjV, "dst")
-      .select(col("src"), col("dst"),
-        array_intersect(col("nbrs_u"), col("nbrs_v")).as("ws"))
-      .where(size(col("ws")) > 0))
-    val credits = withW
-      .select(col("src"), col("dst"), size(col("ws")).cast("long").as("c"))
-      .unionAll(withW.select(col("src"), explode(col("ws")).as("dst"), lit(1L).as("c")))
-      .unionAll(withW.select(col("dst").as("src"), explode(col("ws")).as("dst"), lit(1L).as("c")))
-      .groupBy("src", "dst").agg(sum("c").as("cnt"))
-    oriented
-      .join(credits, Seq("src", "dst"), "left")
-      .select(col("src"), col("dst"), coalesce(col("cnt"), lit(0L)).as("tri_cnt"))
-  }
+      maxBroadcastBytes: Long = AutoBroadcastBytes): DataFrame =
+    keyedCounts(oriented.select(col("src"), col("dst")), "tri_cnt", oriented, adj,
+      placement(adj, maxBroadcastBytes, "edge-membership"))(edgeCredits)
 
-  /** Out-of-core per-edge membership counts — the sharded-broadcast twin of
-    * [[edgeTriangleCounts]]. Unlike [[edgeSupportSharded]]'s disjoint partials,
-    * a base edge (u,v) in pair (bs(u), bs(v)) credits edges (u,w) and (v,w)
-    * that may live in OTHER block pairs, so credits overlap across pairs: the
-    * merge is the same fan-in-batched [[CreditAccumulator]] as
-    * [[perVertexAdjacencySharded]] (credits are sums — associative-commutative,
-    * completion order cannot change the result), edge-keyed instead of
-    * vertex-keyed. Resident state per moment: concurrency × (2 adjacency
-    * blocks + 1 partial) + ≤ fanIn partials + one edge-sized count table. */
+  /** [[edgeTriangleCounts]] in the sharded placement. */
   def edgeTriangleCountsSharded(
       spark: SparkSession,
       oriented: DataFrame,
       adj: DataFrame,
       shards: Int,
-      concurrency: Int = 1): DataFrame = {
-    require(shards >= 1, "shards must be positive")
-    require(concurrency >= 1, "concurrency must be positive")
-    val blocks = GraphCore.csrBlocks(adj, shards).select(col("v"), col("block"))
-    val adjB = CacheTracker.persist(adj.join(blocks, "v").select(col("v"), col("nbrs"), col("block")))
-    val eB = CacheTracker.persist(oriented
-      .join(blocks.select(col("v").as("src"), col("block").as("bs")), "src")
-      .join(blocks.select(col("v").as("dst"), col("block").as("bd")), "dst")
-      .select(col("src"), col("dst"), col("bs"), col("bd")))
-    val present = eB.groupBy("bs", "bd").agg(count(lit(1)))
-      .select(col("bs"), col("bd")).collect()
-      .map(r => (r.getLong(0), r.getLong(1)))
-      .sortBy(identity)
-    val accumulator = new CreditAccumulator(Seq("src", "dst"), resolveMergeFanIn(spark))
-    runPairJobs(spark, concurrency, present.toSeq.map { case (i, j) => () =>
-      accumulator.add(pairEdgeCredits(eB, adjB, i, j).localCheckpoint(true))
-    })
-    val credits = accumulator.result().getOrElse {
-      import spark.implicits._
-      Seq.empty[(Long, Long, Long)].toDF("src", "dst", "cnt")
-    }
-    oriented
-      .join(credits, Seq("src", "dst"), "left")
-      .select(col("src"), col("dst"), coalesce(col("cnt"), lit(0L)).as("tri_cnt"))
-  }
-
-  /** One chunk-pair edge-credit partial: (src, dst, cnt) membership credits of
-    * block pair (i, j)'s base edges — each witness w of base edge (u,v) credits
-    * (u,v), (u,w) and (v,w), all oriented edges under the acyclic orientation. */
-  private[graft] def pairEdgeCredits(eB: DataFrame, adjB: DataFrame, i: Long, j: Long): DataFrame = {
-    val aU = broadcast(adjB.where(col("block") === i)
-      .select(col("v").as("src"), col("nbrs").as("nbrs_u")))
-    val aV = broadcast(adjB.where(col("block") === j)
-      .select(col("v").as("dst"), col("nbrs").as("nbrs_v")))
-    val withW = eB.where(col("bs") === i && col("bd") === j)
-      .join(aU, "src")
-      .join(aV, "dst")
-      .select(col("src"), col("dst"),
-        array_intersect(col("nbrs_u"), col("nbrs_v")).as("ws"))
-      .where(size(col("ws")) > 0)
-    withW
-      .select(col("src"), col("dst"), size(col("ws")).cast("long").as("c"))
-      .unionAll(withW.select(col("src"), explode(col("ws")).as("dst"), lit(1L).as("c")))
-      .unionAll(withW.select(col("dst").as("src"), explode(col("ws")).as("dst"), lit(1L).as("c")))
-      .groupBy("src", "dst").agg(sum("c").as("cnt"))
-  }
+      concurrency: Int = 1): DataFrame =
+    keyedCounts(oriented.select(col("src"), col("dst")), "tri_cnt", oriented, adj,
+      Some(Sharded(shards, concurrency)))(edgeCredits)
 
   /** k-truss peel: iteratively remove every edge in fewer than k−2 triangles
     * until the edge set is stable (or `maxRounds`). The orientation is fixed
@@ -804,11 +645,12 @@ object TriangleCount {
     var done = n == 0L
     while (!done && round < maxRounds) {
       // round-scoped cache release (round-6 verdict #5): each round's
-      // edgeTriangleCounts call persists its witness table and (via
-      // ensurePersisted) the fresh adjacency; once the round's survivor set is
-      // checkpointed and counted nothing references them again — release them
-      // now instead of letting a deep peel accumulate toward CacheTracker's
-      // eviction bound (and from there into silent recompute)
+      // edgeTriangleCounts call persists (via ensurePersisted) the fresh
+      // adjacency, plus the block tables when sharded; once the round's
+      // survivor set is checkpointed and counted nothing references them
+      // again — release them now instead of letting a deep peel accumulate
+      // toward CacheTracker's eviction bound (and from there into silent
+      // recompute)
       val snap = CacheTracker.snapshot(spark)
       val kept = edgeTriangleCounts(spark, e, GraphCore.adjacency(e))
         .where(col("tri_cnt") >= k - 2)

@@ -181,8 +181,9 @@ class TriangleCountSpec extends AnyFunSuite {
   }
 
   test("merge fan-in end-to-end: flush-forcing fanIn equals the broadcast forms") {
-    // one sharded run per kernel at fanIn 2 (3 shards → up to 9 pairs → mid-run
-    // flushes guaranteed); vertex-keyed AND edge-keyed credits
+    // one sharded run per kernel at the default fanIn 8 (3 shards → up to 9
+    // pairs → a mid-run flush once all 9 are present); vertex-keyed AND
+    // edge-keyed credits
     val rnd = new scala.util.Random(58)
     val es = Seq.fill(300)((rnd.nextInt(40).toLong, rnd.nextInt(40).toLong))
     val canonical = GraphCore.clean(edgeDF(es))
@@ -192,17 +193,14 @@ class TriangleCountSpec extends AnyFunSuite {
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val wantE = TriangleCount.edgeTriangleCounts(spark, oriented, adj)
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
-    spark.conf.set("spark.graft.shardMergeFanIn", "2")
-    try {
-      val gotV = TriangleCount.perVertexAdjacencySharded(
-          spark, canonical, oriented, adj, 3, concurrency = 2)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(gotV === wantV, "per-vertex @ fanIn 2")
-      val gotE = TriangleCount.edgeTriangleCountsSharded(
-          spark, oriented, adj, 3, concurrency = 2)
-        .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
-      assert(gotE === wantE, "edge credits @ fanIn 2")
-    } finally spark.conf.unset("spark.graft.shardMergeFanIn")
+    val gotV = TriangleCount.perVertexAdjacencySharded(
+        spark, canonical, oriented, adj, 3, concurrency = 2)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(gotV === wantV, "per-vertex @ fanIn 8")
+    val gotE = TriangleCount.edgeTriangleCountsSharded(
+        spark, oriented, adj, 3, concurrency = 2)
+      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
+    assert(gotE === wantE, "edge credits @ fanIn 8")
     CacheTracker.release(spark)
   }
 
@@ -478,10 +476,44 @@ class TriangleCountSpec extends AnyFunSuite {
       .join(blocks.select(col("v").as("dst"), col("block").as("bd")), "dst")
       .select(col("src"), col("dst"), col("bs"), col("bd"))
     graft.expr.SortedIntersectCount.register(spark)
-    val plan = TriangleCount.shardPairCount(eB, adjB, 0L, 0L)
+    val plan = TriangleCount.triangleSum(TriangleCount.pairProbe(eB, adjB, 0L, 0L))
       .queryExecution.executedPlan.toString
     assert(plan.contains("BroadcastHashJoin"), s"expected broadcast joins:\n$plan")
     assert(!plan.contains("SortMergeJoin"), s"array payload must never sort-merge:\n$plan")
+    CacheTracker.release(spark)
+  }
+
+  test("one block pair's per-vertex credits run the probe once: exactly two broadcast hash joins") {
+    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+    val oriented = GraphCore.orientClean(edgeDF(fixtures.nvgraph8))
+    val (eB, adjB) = TriangleCount.blockTagged(oriented, GraphCore.adjacency(oriented), 2)
+    val plan = TriangleCount.vertexCredits(TriangleCount.pairProbe(eB, adjB, 0L, 0L))
+      .queryExecution.sparkPlan
+    val joins = plan.collect { case j: BroadcastHashJoinExec => j }
+    assert(joins.size === 2, s"endpoint and witness credits must share one probe:\n$plan")
+    CacheTracker.release(spark)
+  }
+
+  test("every adjacency output announces a forced sharded placement in the benchmark's format") {
+    // perfbench/run.py reads placement.shards from this line with this pattern
+    val placementLine = """auto-selecting the (?:per-vertex )?sharded kernel \((\d+) shards""".r
+    val canonical = GraphCore.clean(edgeDF(fixtures.nvgraph8))
+    val oriented = GraphCore.orient(canonical, GraphCore.degrees(canonical))
+    val adj = GraphCore.adjacency(oriented)
+    val outputs = Seq[(String, () => Unit)](
+      "global" -> (() => TriangleCount.globalAdjacency(spark, oriented, adj, maxBroadcastBytes = 1L)),
+      "per-vertex" -> (() => TriangleCount.perVertexAdjacency(canonical, oriented, adj, maxBroadcastBytes = 1L)),
+      "edge-support" -> (() => TriangleCount.edgeSupport(spark, oriented, adj, maxBroadcastBytes = 1L)),
+      "edge-membership" -> (() => TriangleCount.edgeTriangleCounts(spark, oriented, adj, maxBroadcastBytes = 1L)))
+    for ((output, run) <- outputs) {
+      val err = new java.io.ByteArrayOutputStream()
+      Console.withErr(err)(run())
+      val lines = err.toString("UTF-8").linesIterator.filter(placementLine.findFirstIn(_).nonEmpty).toSeq
+      assert(lines.size === 1, s"$output: one decision line, got $lines")
+      assert(lines.head.startsWith(s"[TriangleCount] $output: "), lines.head)
+      val placementLine(shards) = placementLine.findFirstIn(lines.head).get
+      assert(shards.toInt >= 2, lines.head)
+    }
     CacheTracker.release(spark)
   }
 }
